@@ -132,20 +132,22 @@ def main() -> None:
 
     # q3: linking + edge materialization + connected components on a
     # bounded slice (CC is iterative; bound the vertex set for the bench)
-    t0 = time.time()
     entities = spark.createDataFrame(
         [(f"http://data.example.org/e{i}", f"http://canon.example.org/E{i}") for i in range(0, 2000)],
         "surface string, canonical_iri string",
     )
-    linked = link_entities(triples, entities)
-    _ = linked.filter(F.col("canonical_obj").startswith("http://canon")).count()
-    edges = build_edges(triples)
-    cc_edges = edges.filter(F.col("pred").endswith("seeAlso")).limit(20000)
-    _ = connected_components(
-        cc_edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
-        max_iters=10,
-    ).count()
-    queries["link_and_components"] = round(time.time() - t0, 3)
+
+    def _q_link():
+        linked = link_entities(triples, entities)
+        _ = linked.filter(F.col("canonical_obj").startswith("http://canon")).count()
+        edges = build_edges(triples)
+        cc_edges = edges.filter(F.col("pred").endswith("seeAlso")).limit(20000)
+        _ = connected_components(
+            cc_edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+            max_iters=10,
+        ).count()
+
+    queries["link_and_components"] = _best_of(_q_link)
 
     # q3b: BGP pattern query — a 4-pattern chain (two constant-bound
     # patterns + a seeAlso hop + a label lookup) compiled to self-joins

@@ -8,7 +8,7 @@ wins, priority order JSON-LD → Turtle → N-Triples → RDF/XML; an explicit
 ``registerHandler`` ``array_unshift``.
 
 Everything here is pure Python: the Spark pipeline wraps these functions
-in ONE fused Arrow-batched ``mapInPandas`` stage (parser_rdf_spark.parse),
+in ONE fused Arrow-batched ``mapInArrow`` stage (parser_rdf_spark.parse),
 so detection, validation, parsing, and per-doc prefix extraction make a
 single pass over the page text — at 100 TB you never want to ship the
 text column through the JVM↔Python boundary twice.
@@ -16,6 +16,7 @@ text column through the JVM↔Python boundary twice.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -36,6 +37,10 @@ COMMON_PREFIXES: dict[str, str] = {
     "sh": "http://www.w3.org/ns/shacl#",
     "schema": "https://schema.org/",
 }
+
+# No common namespace is a prefix of another, so one match per resource
+# finds every common namespace the resource starts with.
+_COMMON_NS_RE = re.compile("|".join(map(re.escape, sorted(set(COMMON_PREFIXES.values())))))
 
 
 @dataclass
@@ -159,8 +164,6 @@ def _extract_prefixes(
     # layer 2: content regexes (reference :78-173); TriG shares Turtle's
     # @prefix/PREFIX directive surface
     if fmt in ("turtle", "trig"):
-        import re
-
         for m in re.finditer(r"@prefix\s+([^:]+):\s*<([^>]+)>", content, re.IGNORECASE):
             p, ns = m.group(1).strip(), m.group(2).strip()
             if p and ns:
@@ -173,11 +176,11 @@ def _extract_prefixes(
         prefixes.update(rdfxml.extract_xmlns_prefixes(content))
     # json-ld layer 2 == the parser's context map (already in `declared`)
 
-    # layer 4: common prefixes used by some resource term (reference :179-223)
+    # layer 4: common prefixes used by some resource term (reference :179-223),
+    # one regex match per resource instead of a startswith scan per namespace
+    used = {m.group() for m in map(_COMMON_NS_RE.match, resources) if m}
     for p, ns in COMMON_PREFIXES.items():
-        if p in prefixes:
-            continue
-        if any(r.startswith(ns) for r in resources):
+        if ns in used and p not in prefixes:
             prefixes[p] = ns
     return prefixes
 

@@ -1845,15 +1845,11 @@ def _group_solutions(triples: DataFrame, spec: dict, dedup: bool) -> DataFrame:
                 f"SERVICE endpoint <{key}> is not registered — pass "
                 "services={'iri': DataFrame} to sparql_query")
         svc_dfs.append(_eval_service(rel))
-    if not union_dfs and not subs and not svc_dfs:
-        kwargs = _exec_kwargs(spec)
-        patterns = kwargs.pop("patterns")
-        if not patterns and spec.get("services"):
-            # every SERVICE was SILENT-skipped and nothing else binds:
-            # the group is the single empty solution mapping (§18.8)
-            return triples.sparkSession.range(1).drop("id")
-        return bgp_query(triples, patterns, dedup=dedup, **kwargs)
     kwargs = _exec_kwargs(spec)
+    patterns = kwargs.pop("patterns")
+    if not union_dfs and not subs and not svc_dfs and (
+            patterns or not spec.get("services")):
+        return bgp_query(triples, patterns, dedup=dedup, **kwargs)
     filters = kwargs.pop("filters", None)
     # EXISTS/NOT EXISTS/MINUS are group-scoped (they are FILTERs /
     # group elements, not BGP clauses): lift them out of the sibling
@@ -1861,12 +1857,11 @@ def _group_solutions(triples: DataFrame, spec: dict, dedup: bool) -> DataFrame:
     # bound by UNION branches and sub-SELECTs too
     negation = {k: kwargs.pop(k) for k in ("exists", "not_exists", "minus")
                 if kwargs.get(k)}
-    patterns = kwargs.pop("patterns")
     if patterns:
         df = bgp_query(triples, patterns, dedup=dedup, **kwargs)
     elif any(kwargs.get(k) for k in ("optional", "values", "bind")):
         raise SparqlError(
-            "a pattern-less group around UNION/sub-SELECT supports "
+            "a pattern-less group around UNION/sub-SELECT/SERVICE supports "
             "FILTER and EXISTS/NOT EXISTS/MINUS only")
     else:
         df = None
@@ -1877,6 +1872,11 @@ def _group_solutions(triples: DataFrame, spec: dict, dedup: bool) -> DataFrame:
         shared = sorted(set(df.columns) & set(piece.columns))
         df = (df.join(piece, on=shared, how="inner") if shared
               else df.crossJoin(piece))
+    if df is None:
+        # every SERVICE was SILENT-skipped and nothing else binds: the
+        # group is the single empty solution mapping (§18.8), which the
+        # group's FILTERs and negation still apply to
+        df = triples.sparkSession.range(1).drop("id")
     for f in filters or []:
         df = df.filter(F.expr(f))
     if negation:

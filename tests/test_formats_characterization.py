@@ -142,6 +142,32 @@ def test_throwing_custom_handler_never_breaks_detection():
     assert detect_format(NT_LINE) == "n-triples"
 
 
+def test_common_prefix_layer_matches_per_namespace_scan():
+    # E14 layer 4 matches each resource once; the map (key order included)
+    # must equal the reference's scan of every namespace over every resource
+    import random
+
+    common = formats.COMMON_PREFIXES
+    stems = list(common.values()) + [ns[:-1] for ns in common.values()] + [
+        "http://example.org/", "_:b"]
+
+    def reference(declared, resources):
+        out = dict(declared)
+        for p, ns in common.items():
+            if p not in out and any(r.startswith(ns) for r in resources):
+                out[p] = ns
+        return out
+
+    rng = random.Random(7)
+    for _ in range(1000):
+        resources = {rng.choice(stems) + rng.choice(("", "x", "y/z"))
+                     for _ in range(rng.randint(0, 8))}
+        declared = {p: "http://declared.example/"
+                    for p in rng.sample(sorted(common), rng.randint(0, 3))}
+        got = formats._extract_prefixes("", "n-triples", declared, resources)
+        assert list(got.items()) == list(reference(declared, resources).items())
+
+
 # ---------------------------------------------------------------------------
 # parse lifecycle (RdfParserTest.php:100-211)
 # ---------------------------------------------------------------------------

@@ -420,6 +420,17 @@ def test_service_silent_unregistered_is_identity(kg):
     assert [tuple(r) for r in ask.collect()] == [(True,)]
 
 
+def test_service_silent_only_group_still_filters(kg):
+    # the skipped SERVICE leaves the empty mapping; the group's FILTER
+    # still applies to it
+    ask = sparql_query(
+        kg, "ASK { SERVICE SILENT <http://nowhere/> { ?s ?p ?o } FILTER(false) }")
+    assert [tuple(r) for r in ask.collect()] == [(False,)]
+    ask = sparql_query(
+        kg, "ASK { SERVICE SILENT <http://nowhere/> { ?s ?p ?o } FILTER(true) }")
+    assert [tuple(r) for r in ask.collect()] == [(True,)]
+
+
 def test_service_variable_endpoint(kg, spark):
     # SERVICE ?ep ranges over every registered endpoint, binding ?ep
     hr = spark.createDataFrame([("a", "salary", "100")], kg.schema)
